@@ -23,6 +23,7 @@ settable once per job) or an explicit ``'local'``/``'reliable'``.
 
 from __future__ import annotations
 
+from pyspark.errors import PySparkNotImplementedError
 from pyspark.sql import DataFrame, SparkSession
 
 _MODE = "local"
@@ -60,8 +61,9 @@ def materialize(df: DataFrame, mode: str | None = None) -> DataFrame:
         return df.checkpoint(eager=True)
     try:
         return df.localCheckpoint(eager=True)
-    except Exception:
+    except PySparkNotImplementedError:
         # Spark Connect without checkpoint support: correct, just slower.
+        # Anything else (a failing executor, a bad plan) must surface.
         return df
 
 

@@ -13,10 +13,10 @@ without atomic directory rename), layer `operators/snapshot.py`'s
 versioned manifest on top — it takes this module's table_write_lock,
 so the two compose.
 
-Scale note: upsert rewrites the table; on a date-partitioned 100 TB
-layout you'd restrict the rewrite to partitions containing matched
-keys (dynamic partition overwrite) — ``merge_keyed(partition_col=)``
-does exactly that.
+Scale note: upsert rewrites the whole table. The tables it serves
+(user overrides, predictions) are small next to the facts; a large
+date-partitioned table would restrict the rewrite to the partitions
+holding matched keys (dynamic partition overwrite).
 """
 
 from __future__ import annotations
@@ -109,15 +109,13 @@ def merge_keyed(
     path: str,
     updates: DataFrame,
     key: str,
-    partition_col: str | None = None,
     timeout: float = 0.0,
 ) -> None:
     """Upsert `updates` into the parquet table at `path` on `key`.
 
     Equivalent of the reference's DELETE WHERE id = ANY(...) + append
     (classifier_predict.py:149-170): one row per key survives, updates
-    win. With `partition_col`, only partitions containing matched keys
-    are rewritten (plus new-key partitions) — the 100 TB-friendly path.
+    win.
 
     The whole read-merge-swap holds the table lock: two concurrent
     merges would otherwise both read the pre-merge table and the
@@ -125,39 +123,12 @@ def merge_keyed(
     :class:`ConcurrentWriteError` (after ``timeout`` s of polling).
     """
     with table_write_lock(path, timeout=timeout):
-        _merge_keyed_locked(spark, path, updates, key, partition_col)
-
-
-def _merge_keyed_locked(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    key: str,
-    partition_col: str | None,
-) -> None:
-    if not os.path.exists(path):
-        writer = updates.write.mode("overwrite")
-        if partition_col:
-            writer = writer.partitionBy(partition_col)
-        writer.parquet(path)
-        return
-
-    current = spark.read.parquet(path)
-    if partition_col:
-        touched = [
-            r[0]
-            for r in updates.select(partition_col).distinct().collect()
-        ]
-        untouched = current.filter(~F.col(partition_col).isin(touched))
-        touched_cur = current.filter(F.col(partition_col).isin(touched))
-        kept = touched_cur.join(updates.select(key), key, "left_anti")
-        merged = untouched.unionByName(kept).unionByName(
-            updates.select(*current.columns)
-        )
-    else:
+        if not os.path.exists(path):
+            updates.write.mode("overwrite").parquet(path)
+            return
+        current = spark.read.parquet(path)
         kept = current.join(updates.select(key), key, "left_anti")
-        merged = kept.unionByName(updates.select(*current.columns))
-    _overwrite_swap(merged, path)
+        _overwrite_swap(kept.unionByName(updates.select(*current.columns)), path)
 
 
 def insert_only_append(

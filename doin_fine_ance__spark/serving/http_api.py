@@ -56,12 +56,6 @@ def _jsonable(v):
 
 
 def _rows(df) -> list[dict]:
-    if isinstance(df, list):  # pre-collected single-job page
-        return [
-            {k: _jsonable(v) for k, v in
-             (r if isinstance(r, dict) else r.asDict()).items()}
-            for r in df
-        ]
     return [{k: _jsonable(v) for k, v in r.asDict().items()} for r in df.collect()]
 
 
@@ -69,6 +63,19 @@ class HttpError(Exception):
     def __init__(self, status: int, message: str):
         super().__init__(message)
         self.status = status
+
+
+def _page_param(q: dict, name: str, default: int) -> int:
+    """A non-negative integer ``limit``/``offset`` query value; anything
+    else is the client's error (400), not a server failure."""
+    raw = q.get(name, [str(default)])[0]
+    try:
+        value = int(raw)
+    except ValueError:
+        raise HttpError(400, f"{name} must be an integer, got {raw!r}") from None
+    if value < 0:
+        raise HttpError(400, f"{name} must be >= 0, got {value}")
+    return value
 
 
 class ServingApp:
@@ -125,8 +132,8 @@ class ServingApp:
 
         page = get_transactions_filtered(
             self.overlay(),
-            limit=int(q.get("limit", ["100"])[0]),
-            offset=int(q.get("offset", ["0"])[0]),
+            limit=_page_param(q, "limit", 100),
+            offset=_page_param(q, "offset", 0),
             view_mode=q.get("view_mode", [None])[0],
             description_search=q.get("search", [None])[0],
             exclude_low_confidence=q.get("exclude_low_confidence", ["false"])[0].lower()
@@ -220,8 +227,8 @@ class ServingApp:
         page = list_validated_transactions(
             self.wh.read("analytics", "fct_validated_trxns"),
             self._user_categories(),
-            limit=int(q.get("limit", ["100"])[0]),
-            offset=int(q.get("offset", ["0"])[0]),
+            limit=_page_param(q, "limit", 100),
+            offset=_page_param(q, "offset", 0),
             sort_by=q.get("sort_by", [None])[0],
             sort_order=q.get("sort_order", ["desc"])[0],
             category=q.get("category", [None])[0],

@@ -8,12 +8,10 @@ lines 14-35) + a filter/sort/pagination compiler
 
 Serving reads hit *materialized* marts (the reference re-runs a
 5-view-deep chain in Postgres per request — its acknowledged debt,
-TODO.md:12). Unlike the reference's separate COUNT(*) + page queries,
-count and page run as ONE Spark job via ``collect_page_with_total``
-(see ``get_transactions_filtered``): a window ``count(*) OVER ()``
-rides the page scan, and an ``__rn == 1`` sentinel row carries the
-total even when the requested page is past the end — one job per page
-request in every case.
+TODO.md:12). Like the reference, a page request is two Spark actions:
+``count()`` of the filtered overlay for the total, then one sorted
+top-k page from ``paginate`` (see ``operators/pagination.py`` for why
+there is no single-job variant).
 """
 
 from __future__ import annotations
@@ -26,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
 from ..functions.pg import ilike
-from ..operators.pagination import collect_page_with_total, paginate
+from ..operators.pagination import paginate
 from ..schemas import LOW_CONFIDENCE_THRESHOLD, USER_CATEGORIES
 
 # transaction_service.py:196-199 — sort allow-list.
@@ -85,9 +83,7 @@ def _view_mode_predicate(view_mode: str | None) -> Column:
 @dataclass
 class TransactionPage:
     total_count: int
-    # a DataFrame (lazy, two-action path) or pre-collected Rows
-    # (single-job path); http_api._rows handles both
-    transactions: DataFrame | list
+    transactions: DataFrame
 
 
 def get_transactions_filtered(
@@ -100,7 +96,6 @@ def get_transactions_filtered(
     low_confidence_threshold: float = LOW_CONFIDENCE_THRESHOLD,
     sort_by: str | None = None,
     sort_order: str = "desc",
-    single_job: bool = False,
 ) -> TransactionPage:
     """Filter/sort/page compiler (transaction_service.py:137-215).
 
@@ -130,13 +125,6 @@ def get_transactions_filtered(
     )
     order = [direction, col("transaction_id").asc()]
 
-    if single_job:
-        # one action serves page + total, INCLUDING past-the-end pages
-        # (the rn==1 sentinel carries the total when the page is empty)
-        total, slim = collect_page_with_total(
-            filtered, order, limit=limit, offset=offset
-        )
-        return TransactionPage(total_count=total, transactions=slim)
     total = filtered.count()
     page = paginate(filtered, order, limit=limit, offset=offset)
     return TransactionPage(total_count=total, transactions=page)

@@ -133,3 +133,10 @@ def test_module_default_mode_roundtrip(spark, reliable_dir):
         set_checkpoint_mode("bogus")
     with pytest.raises(ValueError):
         materialize(spark.range(1), "bogus")
+
+
+def test_materialize_surfaces_executor_failures(spark):
+    # a failing job must raise, not fall back to a lazy recompute
+    df = spark.range(3).select(F.raise_error(F.lit("materialize boom")))
+    with pytest.raises(Exception, match="materialize boom"):
+        materialize(df, "local")

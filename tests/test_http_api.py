@@ -52,6 +52,15 @@ def test_list_transactions_paging_and_sort(base_url):
     assert ids.isdisjoint(t["transaction_id"] for t in page2["transactions"])
 
 
+@pytest.mark.parametrize("route", ["/api/transactions", "/api/validated"])
+@pytest.mark.parametrize("query", ["limit=ten", "offset=1.5", "limit=-1", "offset=-5"])
+def test_bad_page_params_are_400(base_url, route, query):
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _get(f"{base_url}{route}?{query}")
+    assert e.value.code == 400
+    assert "must be" in json.loads(e.value.read())["error"]
+
+
 def test_search_filters_description(base_url):
     page = _get(f"{base_url}/api/transactions?search=coffee")
     assert page["total_count"] >= 1

@@ -41,6 +41,30 @@ def test_minhash_signature_deterministic(spark):
     assert all(len(sig) == 64 for sig in s1.values())
 
 
+@pytest.mark.parametrize("k,bands", [(64, 16), (10, 4)])  # 10 % 4 != 0
+def test_fused_band_keys_equal_banded_signatures(spark, k, bands):
+    from doin_fine_ance__spark.llm.dedup import band_keys, minhash_band_keys
+
+    docs = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (2, "the quick brown fox jumps over the lazy dog!"),
+            (3, "Ledger   entry:\tCOFFEE shop 4.50"),
+            (4, "abc"),  # shorter than one shingle
+            (5, ""),
+            (6, None),
+        ],
+        "doc_id long, text string",
+    )
+    fused = {tuple(r) for r in minhash_band_keys(docs, k=k, bands=bands).collect()}
+    banded = {
+        tuple(r)
+        for r in band_keys(minhash_signatures(docs, k=k), bands=bands, k=k).collect()
+    }
+    assert len(fused) == 6 * bands
+    assert fused == banded
+
+
 def test_minhash_lsh_finds_planted_dups(spark):
     docs = _docs_with_dups(spark)
     pairs = minhash_near_dups(docs, threshold=0.7).collect()

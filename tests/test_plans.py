@@ -238,52 +238,25 @@ def test_q12_dual_conditional_sums_one_aggregate(spark):
     assert plan.count("HashAggregate") >= 2, plan[:3000]
 
 
-def test_page_with_total_single_pass_plan_and_values(spark):
-    """Single-job serving page (VERDICT r2 next-round #7): the total
-    rides the same global-sort window pass as the row-number, so one
-    action answers a page request — vs COUNT(*) + page as two."""
+@pytest.mark.parametrize("offset", [0, 200])
+def test_paginate_is_top_k_without_single_partition(spark, offset):
+    """Both ``paginate`` branches run as a top-k plan: each partition
+    keeps its best offset+limit rows. A page must never gather the
+    whole input into one partition (``Exchange SinglePartition``), which
+    is what a ``count(*) OVER ()`` page+total would do."""
     from pyspark.sql import functions as F
 
-    from doin_fine_ance__spark.operators.pagination import (
-        count_and_page,
-        page_with_total,
-    )
+    from doin_fine_ance__spark.operators.pagination import paginate
 
     df = spark.range(500).withColumn("v", (F.col("id") * 7) % 113)
     order = [F.col("v").asc(), F.col("id").asc()]
-
-    paged = page_with_total(df, order, limit=20, offset=40)
-    rows = paged.collect()
-    total_2q, page_2q = count_and_page(df, order, limit=20, offset=40)
-    assert [r["__total"] for r in rows] == [500] * 20
-    assert [(r["id"], r["v"]) for r in rows] == [
-        (r["id"], r["v"]) for r in page_2q.collect()
-    ]
-    assert total_2q == 500
-
-    # plan: both window functions share ONE Window node over ONE
-    # exchange — a second Exchange/Window would mean the total is a
-    # separate pass over the data (AQE's toString echoes the initial
-    # plan below the final one; inspect only the final section)
-    plan = paged._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert final.count("Exchange") == 1, final
-    windows = [ln for ln in final.splitlines() if "Window [" in ln]
-    assert len(windows) == 1, final
-    assert "row_number()" in windows[0] and "count(1)" in windows[0]
-
-    # job accounting: the single-pass page costs strictly fewer Spark
-    # jobs than the reference's count+page pair
-    sc = spark.sparkContext
-    sc.setJobGroup("single_job_page", "one-pass page", False)
-    page_with_total(df, order, limit=20, offset=40).collect()
-    jobs_single = len(sc.statusTracker().getJobIdsForGroup("single_job_page"))
-    sc.setJobGroup("two_query_page", "count + page", False)
-    t, p = count_and_page(df, order, limit=20, offset=40)
-    p.collect()
-    jobs_two = len(sc.statusTracker().getJobIdsForGroup("two_query_page"))
-    sc.setJobGroup(None, None, False)
-    assert jobs_single < jobs_two, (jobs_single, jobs_two)
+    page = paginate(df, order, limit=20, offset=offset)
+    rows = [(r["id"], r["v"]) for r in page.collect()]
+    expected = sorted(((i, i * 7 % 113) for i in range(500)), key=lambda t: (t[1], t[0]))
+    assert rows == expected[offset : offset + 20]
+    plan = page._jdf.queryExecution().executedPlan().toString()
+    assert "TakeOrderedAndProject" in plan, plan
+    assert "SinglePartition" not in plan, plan
 
 
 def test_q2_correlated_min_stays_broadcast_no_rescan(spark):

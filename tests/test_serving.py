@@ -73,6 +73,10 @@ def test_description_search_ilike(overlay):
     page = get_transactions_filtered(overlay, description_search="metro")
     rows = page.transactions.collect()
     assert rows and all("METRO" in r.description.upper() for r in rows)
+    # a search matching nothing: an empty filtered set counts 0
+    none = get_transactions_filtered(overlay, description_search="no-such-merchant")
+    assert none.total_count == 0
+    assert none.transactions.collect() == []
 
 
 def test_sort_allowlist_falls_back(overlay):
@@ -83,11 +87,13 @@ def test_sort_allowlist_falls_back(overlay):
 
 
 def test_pagination_disjoint_and_ordered(overlay):
-    p1 = get_transactions_filtered(overlay, limit=3, offset=0).transactions.collect()
-    p2 = get_transactions_filtered(overlay, limit=3, offset=3).transactions.collect()
-    ids1 = {r.transaction_id for r in p1}
-    ids2 = {r.transaction_id for r in p2}
+    p1 = get_transactions_filtered(overlay, limit=3, offset=0).transactions
+    p2 = get_transactions_filtered(overlay, limit=3, offset=3).transactions
+    ids1 = {r.transaction_id for r in p1.collect()}
+    ids2 = {r.transaction_id for r in p2.collect()}
     assert ids1.isdisjoint(ids2)
+    # the offset>0 row-number helper column never leaks into a page
+    assert p1.columns == p2.columns == overlay.columns
 
 
 def test_categorize_upsert_roundtrip(spark, wh):
@@ -155,48 +161,7 @@ def test_connection_health_rollup(spark, wh):
     assert "Savings Account" in names
 
 
-def test_single_job_page_matches_two_action_page(overlay):
-    two = get_transactions_filtered(overlay, limit=10, offset=3)
-    one = get_transactions_filtered(overlay, limit=10, offset=3, single_job=True)
-    assert one.total_count == two.total_count
-    ids_two = [r["transaction_id"] for r in two.transactions.collect()]
-    ids_one = [r["transaction_id"] for r in one.transactions]
-    assert ids_one == ids_two
-    assert all("__total" not in r for r in one.transactions)
-
-
-def test_single_job_page_past_the_end_still_returns_total(overlay):
-    # the rn==1 sentinel carries the total; no second count() job
-    two = get_transactions_filtered(overlay, limit=10, offset=10_000)
-    one = get_transactions_filtered(
-        overlay, limit=10, offset=10_000, single_job=True
-    )
-    assert one.total_count == two.total_count > 0
-    assert one.transactions == []
-
-
-def test_collect_page_with_total_edges(spark):
-    from pyspark.sql import functions as F
-
-    from doin_fine_ance__spark.operators.pagination import (
-        collect_page_with_total,
-    )
-
-    df = spark.range(25).select(F.col("id"))
-    order = [F.col("id").asc()]
-    # first page: sentinel row is also a page row — no duplication
-    total, page = collect_page_with_total(df, order, limit=10, offset=0)
-    assert total == 25
-    assert [r["id"] for r in page] == list(range(10))
-    # past the end: total still exact, page empty
-    total, page = collect_page_with_total(df, order, limit=10, offset=100)
-    assert (total, page) == (25, [])
-    # empty input: zero total without any fallback
-    total, page = collect_page_with_total(
-        df.filter(F.col("id") < 0), order, limit=10, offset=0
-    )
-    assert (total, page) == (0, [])
-    # helper columns never leak
-    total, page = collect_page_with_total(df, order, limit=3, offset=20)
-    assert [r["id"] for r in page] == [20, 21, 22]
-    assert all(set(r) == {"id"} for r in page)
+def test_page_past_the_end_returns_total(overlay):
+    page = get_transactions_filtered(overlay, limit=10, offset=10_000)
+    assert page.total_count == overlay.count() > 0
+    assert page.transactions.collect() == []
